@@ -205,24 +205,24 @@ class GeoFrame:
         else:
             norm = 1.0
         total = _sum(F.col(s) for s in self.species)
-        exprs = {s: F.col(s) / total * F.lit(norm) for s in self.species}
+        exprs = {s: F.col(s) / total * norm for s in self.species}
         return self._rebuild(exprs, self.units)
 
     def _convert_moles_wt_percent(self, normalise: bool = True) -> "GeoFrame":
         """wt.% ↔ mol fraction (``magmaFrame.py:356-385``)."""
         w = self.weights
         if self.units == Unit.WT_PERCENT:
-            exprs = {s: F.col(s) / F.lit(w[s]) for s in self.species}
+            exprs = {s: F.col(s) / w[s] for s in self.species}
             new_units = Unit.MOL_FRACTIONS
         elif self.units == Unit.MOL_FRACTIONS:
-            exprs = {s: F.col(s) * F.lit(w[s]) for s in self.species}
+            exprs = {s: F.col(s) * w[s] for s in self.species}
             new_units = Unit.WT_PERCENT
         else:
             raise ValueError(f"cannot convert units {self.units}")
         if not normalise:
             return self._rebuild(exprs, new_units)
         total = _sum(exprs.values())
-        scale = F.lit(100.0) if new_units == Unit.WT_PERCENT else F.lit(1.0)
+        scale = 100.0 if new_units == Unit.WT_PERCENT else 1.0
         exprs = {s: e / total * scale for s, e in exprs.items()}
         return self._rebuild(exprs, new_units)
 
@@ -232,7 +232,7 @@ class GeoFrame:
             Unit.WT_PERCENT: (1e4, Unit.PPM),
             Unit.PPM: (1e-4, Unit.WT_PERCENT),
         }[self.units]
-        exprs = {s: F.col(s) * F.lit(factor) for s in self.species}
+        exprs = {s: F.col(s) * factor for s in self.species}
         return self._rebuild(exprs, new_units)
 
     def moles(self, normalise: bool = True) -> "GeoFrame":
@@ -287,7 +287,7 @@ class GeoFrame:
         exprs: dict[str, Column] = {}
         for s in mol.species:
             cat = chem.cation_name(s)
-            e = F.col(s) * F.lit(chem.cation_amount(s))
+            e = F.col(s) * chem.cation_amount(s)
             # merge collisions (e.g. FeO + Fe2O3 both → Fe is avoided by
             # the Fe3 naming, but be safe)
             exprs[cat] = exprs[cat] + e if cat in exprs else e
@@ -295,7 +295,7 @@ class GeoFrame:
         if not mol_fractions:
             w = gf.weights
             gf = gf._rebuild(
-                {s: F.col(s) * F.lit(w[s]) for s in gf.species},
+                {s: F.col(s) * w[s] for s in gf.species},
                 Unit.WT_PERCENT,
                 Datatype.CATION,
             )
@@ -304,7 +304,7 @@ class GeoFrame:
             return gf
         total = _sum(F.col(s) for s in gf.species)
         return gf._rebuild(
-            {s: F.col(s) / total * F.lit(norm_to) for s in gf.species},
+            {s: F.col(s) / total * norm_to for s in gf.species},
             gf.units,
             Datatype.CATION,
             total=F.lit(float(norm_to)),
@@ -332,7 +332,7 @@ class GeoFrame:
             )
             oxide = chem.oxide_name(cat_named)
             n_cat = chem.cation_amount(oxide)
-            e = F.col(cat) / F.lit(n_cat)
+            e = F.col(cat) / n_cat
             exprs[oxide] = exprs[oxide] + e if oxide in exprs else e
         gf = cats._rebuild(exprs, Unit.MOL_FRACTIONS, Datatype.OXIDE)
         if orig_units == Unit.MOL_FRACTIONS:
@@ -350,7 +350,7 @@ class GeoFrame:
             / chem.cation_amount(chem.oxide_name(s))
             for s in cats.species
         }
-        return _sum(F.col(s) * F.lit(r) for s, r in ratios.items())
+        return _sum(F.col(s) * r for s, r in ratios.items())
 
     def with_oxygen(self, name: str = "oxygen") -> "GeoFrame":
         cats = self.cations()
@@ -366,7 +366,7 @@ class GeoFrame:
         ratios = {}
         for orig, cat in zip(self.species, cats.species):
             ratios[cat] = chem.oxygen_amount(orig) / chem.cation_amount(orig)
-        oxygen_total = _sum(F.col(c) * F.lit(r) for c, r in ratios.items())
+        oxygen_total = _sum(F.col(c) * r for c, r in ratios.items())
         factor = F.lit(O) / oxygen_total
         exprs = {c: F.col(c) * factor for c in cats.species}
         exprs["O"] = F.lit(O)
@@ -384,7 +384,7 @@ class GeoFrame:
         o_num = {s: chem.oxygen_amount(s) for s in oxides}
         cat_num = {s: chem.cation_amount(s) for s in oxides}
         # oxide moles × O per oxide, normalised to 1 total oxygen
-        o_moles = {s: F.col(s) * F.lit(o_num[s]) for s in oxides}
+        o_moles = {s: F.col(s) * o_num[s] for s in oxides}
         total_o = _sum(o_moles.values())
         exprs = {}
         names = {}
@@ -393,7 +393,7 @@ class GeoFrame:
             cat = chem.cation_name(s)
             frac = _Fr(cpo).limit_denominator()
             names[s] = f"{cat}{frac}O"
-            exprs[names[s]] = o_moles[s] / total_o * F.lit(cpo)
+            exprs[names[s]] = o_moles[s] / total_o * cpo
         gf = mol._rebuild(exprs, Unit.MOL_FRACTIONS, Datatype.CATION)
         return gf
 
@@ -410,9 +410,9 @@ class GeoFrame:
         mol = self.moles()
         if total_Fe == "FeO":
             fe2 = F.col("FeO") * fe2_frac
-            fe3 = F.col("FeO") * (F.lit(1.0) - fe2_frac) / F.lit(2.0)
+            fe3 = F.col("FeO") * (F.lit(1.0) - fe2_frac) / 2.0
         else:
-            fe2 = F.col("Fe2O3") * fe2_frac * F.lit(2.0)
+            fe2 = F.col("Fe2O3") * fe2_frac * 2.0
             fe3 = F.col("Fe2O3") * (F.lit(1.0) - fe2_frac)
         exprs = {}
         for s in mol.species:

@@ -30,22 +30,46 @@ def as_col(x) -> Column:
     return F.lit(float(x))
 
 
-def components_expr(gf: GeoFrame, components: list[str]) -> dict[str, Column]:
-    """check_components as expressions: null→0, missing→lit(0)."""
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in gf.species}
-    for c in components:
-        comp.setdefault(c, F.lit(0.0))
-    return comp
+def components_expr(
+    gf: GeoFrame,
+    components=(),
+    comp: dict[str, Column] | None = None,
+    prefix: str = "",
+) -> dict[str, Column]:
+    """check_components as expressions (``parse_io/parse.py:47-65``):
+    null→0, missing→lit(0).
+
+    ``comp`` is this map as already built for ``gf`` by another model
+    of the same query; it is extended, not rebuilt, so a query that
+    chains models over one melt builds the null→0 columns once.
+    ``prefix`` reads species ``s`` from column ``prefix + s``."""
+    zero = None
+    if comp is None:
+        zero = F.lit(0.0)
+        comp = {s: F.coalesce(F.col(prefix + s), zero) for s in gf.species}
+    missing = [c for c in components if c not in comp]
+    if missing and zero is None:
+        zero = F.lit(0.0)
+    return {**comp, **dict.fromkeys(missing, zero)}
+
+
+def mole_exprs(
+    comp: dict[str, Column], exclude: tuple[str, ...] = ()
+) -> dict[str, Column]:
+    """wt.% → (unnormalised) moles: ``w / molar weight``."""
+    return {
+        s: c / chem.calculate_weight(s)
+        for s, c in comp.items()
+        if s not in exclude
+    }
 
 
 def mole_fraction_exprs(
     comp: dict[str, Column], exclude: tuple[str, ...] = ()
 ) -> dict[str, Column]:
-    mol = {
-        s: c / F.lit(chem.calculate_weight(s))
-        for s, c in comp.items()
-        if s not in exclude
-    }
+    """wt.% → mol fractions over the included species
+    (``magmaFrame.py:356-385`` with normalise=True)."""
+    mol = mole_exprs(comp, exclude)
     total = csum(mol.values())
     return {s: m / total for s, m in mol.items()}
 
@@ -56,7 +80,7 @@ def cation_fraction_exprs(mol: dict[str, Column]) -> dict[str, Column]:
     cat: dict[str, Column] = {}
     for s, m in mol.items():
         name = chem.cation_name(s)
-        e = m * F.lit(chem.cation_amount(s))
+        e = m * chem.cation_amount(s)
         cat[name] = cat[name] + e if name in cat else e
     total = csum(cat.values())
     return {n: e / total for n, e in cat.items()}

@@ -36,6 +36,7 @@ from magmapandas_spark.models.common import (
     as_col,
     cation_fraction_exprs,
     cation_fractions_np,
+    components_expr,
     csum,
     feo_fe2o3_split_np,
     mole_fraction_exprs,
@@ -46,7 +47,7 @@ LN10 = float(np.log(10.0))
 
 
 def _log10(x: Column) -> Column:
-    return F.log(x) / F.lit(LN10)
+    return F.log(x) / LN10
 
 
 def _cat(mol: dict[str, Column]) -> dict[str, Column]:
@@ -80,7 +81,7 @@ def fe3fe2_borisov2018(mol, T_K, fO2, P_bar=None) -> Column:
     part3 = (
         F.lit(-3.081) * m(mol, "SiO2") * m(mol, "Al2O3")
         - F.lit(4.370) * m(mol, "SiO2") * m(mol, "MgO")
-        - F.lit(1.852)
+        - 1.852
     )
     return F.pow(F.lit(10.0), part1 + part2 + part3)
 
@@ -93,15 +94,15 @@ def fe3fe2_kress_carmichael1991(mol, T_K, fO2, P_bar) -> Column:
     """Kress & Carmichael (1991) eq. 7 (``Fe3Fe2_models.py:144-213``)."""
     a, b, c = 0.196, 1.1492e4, -6.675
     e, f_, g, h, T0 = -3.36, -7.01e-7, -1.54e-10, 3.85e-17, 1673.0
-    P_Pa = as_col(P_bar) * F.lit(1e5)
+    P_Pa = as_col(P_bar) * 1e5
     comps = csum(F.lit(d) * _g(mol, s) for s, d in _KC1991_D.items())
-    part1 = F.lit(a) * F.log(fO2) + F.lit(b) / T_K + F.lit(c) + comps
+    part1 = F.lit(a) * F.log(fO2) + F.lit(b) / T_K + c + comps
     part2 = F.lit(e) * (
-        F.lit(1.0) - F.lit(T0) / T_K - F.log(T_K / F.lit(T0))
+        F.lit(1.0) - F.lit(T0) / T_K - F.log(T_K / T0)
     )
     part3 = (
         F.lit(f_) * P_Pa / T_K
-        + F.lit(g) * ((T_K - F.lit(T0)) * P_Pa) / T_K
+        + F.lit(g) * ((T_K - T0) * P_Pa) / T_K
         + F.lit(h) * P_Pa**2 / T_K
     )
     return F.lit(2.0) * F.exp(part1 + part2 + part3)
@@ -115,7 +116,7 @@ def fe3fe2_jayasuriya2004(mol, T_K, fO2, P_bar=None) -> Column:
     """Jayasuriya et al. (2004) eq. 12 (``Fe3Fe2_models.py:226-266``)."""
     comps = csum(F.lit(d) * _g(mol, s) for s, d in _J2004_D.items())
     return F.lit(2.0) * F.exp(
-        F.lit(0.1967) * F.log(fO2) + F.lit(12420.0) / T_K - F.lit(7.054) + comps
+        F.lit(0.1967) * F.log(fO2) + F.lit(12420.0) / T_K - 7.054 + comps
     )
 
 
@@ -172,7 +173,7 @@ def fe3fe2_oneill2018(mol, T_K, fO2, P_bar=None) -> Column:
     return F.pow(
         F.lit(10.0),
         F.lit(0.25) * deltaQFM
-        - F.lit(1.36)
+        - 1.36
         + F.lit(2.4) * _g(cat, "Ca")
         + F.lit(2.0) * _g(cat, "Na")
         + F.lit(3.7) * _g(cat, "K")
@@ -184,19 +185,17 @@ def fe3fe2_zhang2017(mol, T_K, fO2, P_bar) -> Column:
     """Zhang et al. (2017) eq. 11, 'LC' parameters
     (``Fe3Fe2_models.py:1162-1233``)."""
     dVdT, a, b, c, d = 2.92, -6.376, 107257.0, 15095.0, 8.27e-2
-    P = as_col(P_bar) * F.lit(1e5 / 1e9)
-    part_1 = F.log(fO2) / F.lit(4.0) + F.lit(a) + F.lit(b) / (F.lit(R) * T_K)
+    P = as_col(P_bar) * (1e5 / 1e9)
+    part_1 = F.log(fO2) / 4.0 + a + F.lit(b) / (F.lit(R) * T_K)
     part_2 = (
-        -(F.lit(20170.0) + F.lit(4.54) * (T_K - F.lit(1673.0)))
-        * F.lit(16.6 / 3.0)
-        * (F.pow(F.lit(1.0) + F.lit(0.241) * P, F.lit(0.75)) - F.lit(1.0))
+        -(F.lit(20170.0) + F.lit(4.54) * (T_K - 1673.0))
+        * (16.6 / 3.0)
+        * (F.pow(F.lit(1.0) + F.lit(0.241) * P, F.lit(0.75)) - 1.0)
         / (F.lit(R) * T_K)
     )
-    part_3 = (F.lit(c) + F.lit(dVdT) * (T_K - F.lit(1673.0))) * F.lit(
-        4.0 / (3.0 * d)
-    )
+    part_3 = (F.lit(c) + F.lit(dVdT) * (T_K - 1673.0)) * (4.0 / (3.0 * d))
     part_4 = (
-        F.pow(F.lit(1.0) + F.lit(d) * P, F.lit(0.75)) - F.lit(1.0)
+        F.pow(F.lit(1.0) + F.lit(d) * P, F.lit(0.75)) - 1.0
     ) / (F.lit(R) * T_K)
     return F.exp(part_1 + part_2 + part_3 * part_4)
 
@@ -208,15 +207,15 @@ _ARMSTRONG_EOS = {"Fe2": (37.0, 8.0), "Fe3": (12.6, 1.3)}  # K_0, Kprime_0
 def _armstrong_V0_expr(T_K: Column, phase: str) -> Column:
     """``Fe3Fe2_models.py:1120-1133`` (mm3/mol)."""
     if phase == "Fe2":
-        return F.lit(13650.0) + F.lit(2.92) * (T_K - F.lit(1673.0))
-    return F.lit(21070.0) + F.lit(4.54) * (T_K - F.lit(1673.0))
+        return F.lit(13650.0) + F.lit(2.92) * (T_K - 1673.0)
+    return F.lit(21070.0) + F.lit(4.54) * (T_K - 1673.0)
 
 
 def _armstrong_VdP_expr(P_bar: Column, T_K: Column, phase: str) -> Column:
     """``Fe3Fe2_models.py:1088-1118`` (eq. S7-S10)."""
     K0, Kp = _ARMSTRONG_EOS[phase]
     Kpp = -Kp / K0
-    P = P_bar / F.lit(1e4)
+    P = P_bar / 1e4
     V0 = _armstrong_V0_expr(T_K, phase)
     a = (1 + Kp) / (1 + Kp + K0 * Kpp)
     b = Kp / K0 - Kpp / (1 + Kp)
@@ -257,12 +256,12 @@ def fe3fe2_hirschmann2022(mol, T_K, fO2, P_bar) -> Column:
         + F.lit(p["y9"]) * _g(cat, "Si") * _g(cat, "Mg")
     )
     dVdP = _armstrong_dVdP_expr(as_col(P_bar), T_K)
-    part_1 = F.lit(p["a"]) * _log10(fO2) + F.lit(p["b"]) + F.lit(p["c"]) / T_K
+    part_1 = F.lit(p["a"]) * _log10(fO2) + p["b"] + F.lit(p["c"]) / T_K
     part_2 = (
         F.lit(-p["dCp"] / (R * np.log(10.0)))
-        * (F.lit(1.0) - F.lit(p["T0"]) / T_K - F.log(T_K / F.lit(p["T0"])))
+        * (F.lit(1.0) - F.lit(p["T0"]) / T_K - F.log(T_K / p["T0"]))
     )
-    part_3 = -dVdP / (F.lit(R) * T_K * F.lit(LN10))
+    part_3 = -dVdP / (F.lit(R) * T_K * LN10)
     part_4 = comp / T_K
     return F.pow(F.lit(10.0), part_1 + part_2 + part_3 + part_4)
 
@@ -288,12 +287,13 @@ _SUN2024_GAMMA = {
 
 def _sun2024_t_expr(name: str, P_bar: Column) -> Column:
     p = _SUN2024_GAMMA[name]
-    P = P_bar / F.lit(1e4)
+    P = P_bar / 1e4
     P0 = 1e-4
-    part_1 = F.lit(p["b0"]) * P**2 * F.log(P / F.lit(P0))
+    part_1 = F.lit(p["b0"]) * P**2 * F.log(P / P0)
+    dP = P - P0
     part_2 = csum(
-        F.lit(p[f"b{n}"]) * F.pow(P - F.lit(P0), F.lit(float(n)))
-        + F.lit(p[f"c{n}"]) * F.pow(P - F.lit(P0), F.lit(n - 0.5))
+        F.lit(p[f"b{n}"]) * F.pow(dP, F.lit(float(n)))
+        + F.lit(p[f"c{n}"]) * F.pow(dP, F.lit(n - 0.5))
         for n in range(1, 5)
     )
     return part_1 + part_2
@@ -632,8 +632,7 @@ def calculate_Fe3Fe2(
     if fO2 is None:
         fO2 = fo2mod.calculate_fO2(T, P, fO2_buffer=fO2_buffer, dfO2=dfO2)
 
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in melt.species}
-    mol = mole_fraction_exprs(comp)
+    mol = mole_fraction_exprs(components_expr(melt))
 
     if model in EXPR_MODELS:
         expr = EXPR_MODELS[model](mol, T, fO2, P)

@@ -39,7 +39,7 @@ def _offset(logshift) -> Column:
 def fo2_nno(logshift, T_K, P_bar) -> Column:
     """Campbell et al. (2009) NNO buffer (``fO2/NNO.py:9-28``)."""
     T = as_col(T_K)
-    P = as_col(P_bar) / F.lit(1e4)
+    P = as_col(P_bar) / 1e4
     part_1 = (
         F.lit(8.699)
         + F.lit(1.642e-2) * P
@@ -74,7 +74,7 @@ def fo2_nno_frost(logshift, T_K, P_bar) -> Column:
 def fo2_ruruo2(logshift, T_K, P_bar) -> Column:
     """Armstrong et al. (2019) eq. S3 (``fO2/RuRuO2.py:1-23``)."""
     T = as_col(T_K)
-    P = as_col(P_bar) / F.lit(1e4)
+    P = as_col(P_bar) / 1e4
     log10fO2 = (
         (
             F.lit(7.782)
@@ -91,7 +91,7 @@ def fo2_ruruo2(logshift, T_K, P_bar) -> Column:
 def fo2_iw_campbell(logshift, T_K, P_bar) -> Column:
     """Campbell et al. (2009) IW (``fO2/IW.py:474-492``)."""
     T = as_col(T_K)
-    P = as_col(P_bar) * F.lit(1e5 / 1e9)
+    P = as_col(P_bar) * (1e5 / 1e9)
     part_1 = F.lit(6.54106) + F.lit(1.23e-3) * P
     part_2 = (
         F.lit(-28164.0)
@@ -105,11 +105,11 @@ def fo2_iw_campbell(logshift, T_K, P_bar) -> Column:
 def fo2_fefeo94_oneill_huebner(logshift, T_K, P_bar) -> Column:
     """Fe-FeO(0.94) buffer (``fO2/IW.py:495-509``)."""
     T = as_col(T_K)
-    P = as_col(P_bar) * F.lit(1e5 / 1e9)
-    part_1 = F.lit(-28777.89) / T + F.lit(14.0572)
+    P = as_col(P_bar) * (1e5 / 1e9)
+    part_1 = F.lit(-28777.89) / T + 14.0572
     part_2 = (
-        F.lit(-2.039) * (F.log(T) / F.lit(LN10))
-        + F.lit(550.0) * (P - F.lit(1e-4)) / T
+        F.lit(-2.039) * (F.log(T) / LN10)
+        + F.lit(550.0) * (P - 1e-4) / T
     )
     return F.pow(F.lit(10.0), part_1 + part_2) * _offset(logshift)
 
@@ -121,13 +121,13 @@ def fo2_iw_zhang(logshift, T_K, P_bar) -> Column:
     P = as_col(P_bar)
     oh = fo2_fefeo94_oneill_huebner(logshift, T_K, P_bar)
     camp = fo2_iw_campbell(logshift, T_K, P_bar)
-    w = F.lit(0.2) * P / F.lit(1e4)
+    w = F.lit(0.2) * P / 1e4
     blended = F.pow(
         F.lit(10.0),
-        (F.log(oh) / F.lit(LN10)) * (F.lit(1.0) - w)
-        + w * (F.log(camp) / F.lit(LN10)),
+        (F.log(oh) / LN10) * (F.lit(1.0) - w)
+        + w * (F.log(camp) / LN10),
     )
-    return F.when(P < F.lit(5e4), blended).otherwise(camp)
+    return F.when(P < 5e4, blended).otherwise(camp)
 
 
 def fo2_iw_oneill1993(T_K, logshift=0) -> Column:
@@ -143,8 +143,8 @@ def fo2_iw_oneill1993(T_K, logshift=0) -> Column:
     mu_mid = F.lit(-519113.0) + F.lit(59.129) * T + F.lit(8.9276) * lnT * T
     mu_high = F.lit(-550915.0) + F.lit(269.106) * T - F.lit(16.9484) * lnT * T
     mu = (
-        F.when(T < F.lit(1042.0), mu_low)
-        .when(T <= F.lit(1184.0), mu_mid)
+        F.when(T < 1042.0, mu_low)
+        .when(T <= 1184.0, mu_mid)
         .otherwise(mu_high)
     )
     return F.exp(mu / (F.lit(R) * T)) * _offset(logshift)

@@ -28,6 +28,7 @@ from magmapandas_spark.models.common import (
     as_col,
     cation_fraction_exprs,
     cation_fractions_np,
+    components_expr,
     csum,
     mole_fraction_exprs,
 )
@@ -75,7 +76,7 @@ def kd_putirka2016_8a(wt, T_K=None, P_bar=None, Fe3Fe2=None) -> Column:
 
 def kd_putirka2016_8b(wt, T_K=None, P_bar=0.0, Fe3Fe2=None) -> Column:
     """``Kd_models.py:446-491``; input wt.% oxides."""
-    P_GPa = as_col(P_bar) / F.lit(1e4)
+    P_GPa = as_col(P_bar) / 1e4
     g = lambda s: wt.get(s, F.lit(0.0))
     return (
         F.lit(0.21)
@@ -98,7 +99,7 @@ def kd_putirka2016_8c(wt, T_K=None, P_bar=None, Fe3Fe2=None) -> Column:
 def kd_putirka2016_8d(wt, T_K=None, P_bar=0.0, Fe3Fe2=None) -> Column:
     """``Kd_models.py:536-593``."""
     g = lambda s: wt.get(s, F.lit(0.0))
-    P_GPa = as_col(P_bar) / F.lit(1e4)
+    P_GPa = as_col(P_bar) / 1e4
     al_no = g("Al2O3") / (g("Al2O3") + g("SiO2"))
     return (
         F.lit(0.6)
@@ -119,7 +120,7 @@ def kd_sun2020(mol, wt, Fe3Fe2) -> Column:
     oxides = [
         s for s in mol if s not in volatiles and chem.oxygen_amount(s) > 0
     ]
-    o_moles = {s: mol[s] * F.lit(chem.oxygen_amount(s)) for s in oxides}
+    o_moles = {s: mol[s] * chem.oxygen_amount(s) for s in oxides}
     total_o = csum(o_moles.values())
     per_ox = {}
     for s in oxides:
@@ -127,12 +128,12 @@ def kd_sun2020(mol, wt, Fe3Fe2) -> Column:
         from fractions import Fraction as _Fr
 
         name = f"{chem.cation_name(s)}{_Fr(cpo).limit_denominator()}O"
-        per_ox[name] = o_moles[s] / total_o * F.lit(cpo)
+        per_ox[name] = o_moles[s] / total_o * cpo
     kd_fetot = F.exp(
         F.lit(-1.65)
         + F.lit(1.22) * F.sqrt(per_ox.get("Mg1O", F.lit(0.0)))
         + F.lit(2.45) * per_ox.get("Na2O", F.lit(0.0))
-        + F.lit(0.54) * (wt.get("H2O", F.lit(0.0)) / F.lit(100.0))
+        + F.lit(0.54) * (wt.get("H2O", F.lit(0.0)) / 100.0)
     )
     fe3_fetot = Fe3Fe2 / (F.lit(1.0) + Fe3Fe2)
     return kd_fetot / (F.lit(1.0) - fe3_fetot)
@@ -271,6 +272,13 @@ def _kd_solver_udf(model: str, species: list[str]):
 # top-level API
 # ----------------------------------------------------------------------
 
+# expression-tier models of renormalised wt.% only
+_KD_WT_MODELS = {
+    "putirka2016_8b": kd_putirka2016_8b,
+    "putirka2016_8c": kd_putirka2016_8c,
+    "putirka2016_8d": kd_putirka2016_8d,
+}
+
 Kd_models = ["fixed", "toplis2005", "blundy2020", "putirka2016_8a",
              "putirka2016_8b", "putirka2016_8c", "putirka2016_8d",
              "sun2020", "saper2022"]
@@ -315,10 +323,14 @@ def calculate_FeMg_Kd(
     Fe3Fe2_model: str = "sun2024",
     fixed_value: float | None = None,
     out_col: str = "Kd",
+    comp: dict[str, Column] | None = None,
 ) -> DataFrame:
     """Engine equivalent of ``Melt.Kd_olivine_FeMg_eq`` + dispatcher
     (``core/MagmaFrames/melt.py:276-316``, ``Kd_calculate.py:65-102``):
     melt wt.% → mol fractions → (Fe3Fe2 chain if not given) → Kd.
+    Only the nodes the model reads are built: putirka2016_8a is a
+    constant and 8b-8d read renormalised wt.% only. ``comp``: see
+    :func:`components_expr`.
 
     For ``blundy2020`` the reference forces Fe3Fe2 from borisov2018 with
     buffer fO2 (``Kd_models.py:352-362``) — reproduced here."""
@@ -331,13 +343,17 @@ def calculate_FeMg_Kd(
         if fixed_value is None:
             raise ValueError("fixed model needs fixed_value")
         return melt.df.withColumn(out_col, F.lit(float(fixed_value)))
+    if model == "putirka2016_8a":
+        return melt.df.withColumn(out_col, kd_putirka2016_8a(None))
 
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in melt.species}
-    mol = mole_fraction_exprs(comp)
+    comp = components_expr(melt, comp=comp)
     # wt.% renormalised (mol → wt backtrack is just the normalised input)
     total_wt = csum(comp.values())
-    wt = {s: comp[s] / total_wt * F.lit(100.0) for s in comp}
+    wt = {s: comp[s] / total_wt * 100.0 for s in comp}
+    if model in _KD_WT_MODELS:
+        return melt.df.withColumn(out_col, _KD_WT_MODELS[model](wt, P_bar=P))
 
+    mol = mole_fraction_exprs(comp)
     if Fe3Fe2 is None:
         fO2_col = fo2_mod.calculate_fO2(T, P, fO2_buffer=fO2_buffer, dfO2=dfO2)
         if model == "blundy2020":
@@ -348,14 +364,6 @@ def calculate_FeMg_Kd(
         else:
             Fe3Fe2 = fe_mod.EXPR_MODELS[Fe3Fe2_model](mol, T, fO2_col, P)
 
-    if model == "putirka2016_8a":
-        return melt.df.withColumn(out_col, kd_putirka2016_8a(wt))
-    if model == "putirka2016_8b":
-        return melt.df.withColumn(out_col, kd_putirka2016_8b(wt, P_bar=P))
-    if model == "putirka2016_8c":
-        return melt.df.withColumn(out_col, kd_putirka2016_8c(wt))
-    if model == "putirka2016_8d":
-        return melt.df.withColumn(out_col, kd_putirka2016_8d(wt, P_bar=P))
     if model == "sun2020":
         return melt.df.withColumn(out_col, kd_sun2020(mol, wt, Fe3Fe2))
     if model in _KD_EXPR_REGISTRY:
@@ -389,8 +397,7 @@ def observed_FeMg_Kd(
 
     T = as_col(T_K)
     P = as_col(P_bar)
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in melt.species}
-    mol = mole_fraction_exprs(comp)
+    mol = mole_fraction_exprs(components_expr(melt))
     if Fe3Fe2 is None:
         fO2_col = fo2_mod.calculate_fO2(T, P, fO2_buffer=fO2_buffer, dfO2=dfO2)
         Fe3Fe2 = fe_mod.EXPR_MODELS[Fe3Fe2_model](mol, T, fO2_col, P)

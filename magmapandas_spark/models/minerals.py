@@ -56,7 +56,7 @@ def cpx_formula(cpx: GeoFrame) -> GeoFrame:
 def plagioclase_anorthite(plag: GeoFrame, out_col: str = "An") -> DataFrame:
     """An content Ca·100/(Ca+Na) (``plagioclase.py:28-36``)."""
     cat = cation_fraction_exprs(_mol(plag))
-    expr = cat["Ca"] * F.lit(100.0) / (cat["Ca"] + cat["Na"])
+    expr = cat["Ca"] * 100.0 / (cat["Ca"] + cat["Na"])
     return plag.df.withColumn(out_col, expr)
 
 
@@ -65,9 +65,9 @@ def plagioclase_endmembers(plag: GeoFrame) -> DataFrame:
     cat = cation_fraction_exprs(_mol(plag))
     tot = cat["Ca"] + cat["Na"] + cat.get("K", F.lit(0.0))
     return (
-        plag.df.withColumn("anorthite", cat["Ca"] * F.lit(100.0) / tot)
-        .withColumn("albite", cat["Na"] * F.lit(100.0) / tot)
-        .withColumn("orthoclase", cat.get("K", F.lit(0.0)) * F.lit(100.0) / tot)
+        plag.df.withColumn("anorthite", cat["Ca"] * 100.0 / tot)
+        .withColumn("albite", cat["Na"] * 100.0 / tot)
+        .withColumn("orthoclase", cat.get("K", F.lit(0.0)) * 100.0 / tot)
     )
 
 
@@ -87,7 +87,7 @@ def _cations_norm_expr(gf: GeoFrame, components: list[str], norm_to: float):
         mole_fraction_exprs(comp) if gf.units == Unit.WT_PERCENT else comp
     )
     cat = cation_fraction_exprs(mol)
-    return {n: e * F.lit(norm_to) for n, e in cat.items()}
+    return {n: e * norm_to for n, e in cat.items()}
 
 
 def magnetite_endmembers(mt: GeoFrame) -> DataFrame:
@@ -98,10 +98,10 @@ def magnetite_endmembers(mt: GeoFrame) -> DataFrame:
     magnetite = (
         (g("Mg") + g("Mn") + g("Fe"))
         - F.lit(2.0) * g("Ti")
-        - g("Al") / F.lit(2.0)
-    ) / F.lit(3.0)
-    mg_ulv = g("Mg") / F.lit(2.0)
-    mn_ulv = g("Mn") / F.lit(2.0)
+        - g("Al") / 2.0
+    ) / 3.0
+    mg_ulv = g("Mg") / 2.0
+    mn_ulv = g("Mn") / 2.0
     ulv = g("Ti") - mn_ulv - mg_ulv
     total = magnetite + ulv + mg_ulv
     ulv_frac = (ulv + mg_ulv) / total
@@ -120,13 +120,13 @@ def magnetite_fe_speciation(mt: GeoFrame) -> DataFrame:
     magnetite = (
         (g("Mg") + g("Mn") + g("Fe"))
         - F.lit(2.0) * g("Ti")
-        - g("Al") / F.lit(2.0)
-    ) / F.lit(3.0)
+        - g("Al") / 2.0
+    ) / 3.0
     Fe3 = F.lit(2.0) * magnetite
     Fe2 = (
         magnetite
         + F.lit(2.0) * g("Ti")
-        + g("Al") / F.lit(2.0)
+        + g("Al") / 2.0
         - g("Mg")
         - g("Mn")
     )
@@ -143,9 +143,9 @@ def ilmenite_endmembers(ilm: GeoFrame) -> DataFrame:
     """Ilmenite endmembers, Andersen/QUILF (``ilmenite.py:17-51``)."""
     cat = _cations_norm_expr(ilm, _ILMENITE_COMPONENTS, 2.0)
     g = lambda n: cat.get(n, F.lit(0.0))
-    hematite = ((g("Fe") + g("Mg") + g("Mn")) - g("Ti")) / F.lit(2.0)
+    hematite = ((g("Fe") + g("Mg") + g("Mn")) - g("Ti")) / 2.0
     Fe2 = g("Ti") - g("Mg") - g("Mn")
-    ilmenite = Fe2 + g("Al") / F.lit(2.0)
+    ilmenite = Fe2 + g("Al") / 2.0
     total = hematite + ilmenite + g("Mn") + g("Mg")
     return (
         ilm.df.withColumn("hematite", hematite / total)
@@ -159,7 +159,7 @@ def ilmenite_fe_speciation(ilm: GeoFrame) -> DataFrame:
     """Fe split at 2-cation normalisation (``ilmenite.py:53-97``)."""
     cat = _cations_norm_expr(ilm, _ILMENITE_COMPONENTS, 2.0)
     g = lambda n: cat.get(n, F.lit(0.0))
-    hematite = ((g("Fe") + g("Mg") + g("Mn")) - g("Ti")) / F.lit(2.0)
+    hematite = ((g("Fe") + g("Mg") + g("Mn")) - g("Ti")) / 2.0
     Fe2 = g("Ti") - g("Mg") - g("Mn")
     Fe3 = F.lit(2.0) * hematite
     out = ilm.df
@@ -187,7 +187,7 @@ def oxygen_per_cation_expr(melt: GeoFrame) -> Column:
         name = chem.cation_name(s)
         o, c = chem.oxygen_amount(s), chem.cation_amount(s)
         ratios[name] = o / c
-    return csum(cat[n] * F.lit(r) for n, r in ratios.items() if n in cat)
+    return csum(cat[n] * r for n, r in ratios.items() if n in cat)
 
 
 def nbo(melt: GeoFrame, out_col: str = "NBO") -> DataFrame:

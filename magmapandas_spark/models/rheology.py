@@ -13,7 +13,12 @@ from pyspark.sql import functions as F
 
 from magmapandas_spark.chem import elements as chem
 from magmapandas_spark.core.geoframe import GeoFrame
-from magmapandas_spark.models.common import as_col, csum, mole_fraction_exprs
+from magmapandas_spark.models.common import (
+    as_col,
+    components_expr,
+    csum,
+    mole_fraction_exprs,
+)
 
 # Iacovino & Till (2019) model tables (``rheology/density.py:11-69``)
 DENSITY_T_REF = {"SiO2": 1773.0, "TiO2": 1773.0, "Al2O3": 1773.0,
@@ -33,31 +38,34 @@ DVDP = {"SiO2": -1.89e-4, "TiO2": -2.31e-4, "Al2O3": -2.26e-4,
 DENSITY_COMPONENTS = list(MOLAR_VOLUMES)
 
 
-def calculate_density(melt: GeoFrame, T_K, P_bar, out_col: str = "density") -> DataFrame:
+def calculate_density(
+    melt: GeoFrame,
+    T_K,
+    P_bar,
+    out_col: str = "density",
+    comp: dict[str, Column] | None = None,
+) -> DataFrame:
     """Melt density in kg/m3 (``rheology/density.py:72-114``).
 
     Mole fractions are taken over the FULL composition, then only the
     10 model oxides enter the volume sum (not renormalised —
-    ``density.py:96-98``)."""
+    ``density.py:96-98``). ``comp``: see :func:`components_expr`."""
     T = as_col(T_K)
-    P = as_col(P_bar)
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in melt.species}
-    for c in DENSITY_COMPONENTS:
-        comp.setdefault(c, F.lit(0.0))
-    mol = mole_fraction_exprs(comp)
+    dP = as_col(P_bar) - 1.0
+    mol = mole_fraction_exprs(components_expr(melt, DENSITY_COMPONENTS, comp))
     mass = csum(
-        mol[s] * F.lit(chem.calculate_weight(s)) for s in DENSITY_COMPONENTS
+        mol[s] * chem.calculate_weight(s) for s in DENSITY_COMPONENTS
     )
     v_liquid = csum(
         (
-            (T - F.lit(DENSITY_T_REF[s])) * F.lit(DVDT[s])
-            + (P - F.lit(1.0)) * F.lit(DVDP[s])
-            + F.lit(MOLAR_VOLUMES[s])
+            (T - DENSITY_T_REF[s]) * DVDT[s]
+            + dP * DVDP[s]
+            + MOLAR_VOLUMES[s]
         )
         * mol[s]
         for s in DENSITY_COMPONENTS
     )
-    return melt.df.withColumn(out_col, mass / v_liquid * F.lit(1e3))
+    return melt.df.withColumn(out_col, mass / v_liquid * 1e3)
 
 
 # Giordano et al. (2008) (``rheology/viscosity.py:14-50``)
@@ -68,17 +76,21 @@ VISCOSITY_COMPONENTS = ["SiO2", "TiO2", "Al2O3", "FeO", "MnO", "P2O5",
                         "MgO", "CaO", "Na2O", "H2O", "F2", "K2O"]
 
 
-def calculate_viscosity(melt: GeoFrame, T_K, out_col: str = "viscosity") -> DataFrame:
+def calculate_viscosity(
+    melt: GeoFrame,
+    T_K,
+    out_col: str = "viscosity",
+    comp: dict[str, Column] | None = None,
+) -> DataFrame:
     """log10 viscosity in Pa·s (``rheology/viscosity.py:114-135``).
 
     B and C terms from mol% of the full composition
-    (``viscosity.py:53-111``)."""
+    (``viscosity.py:53-111``). ``comp``: see :func:`components_expr`."""
     T = as_col(T_K)
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in melt.species}
-    for c in VISCOSITY_COMPONENTS:
-        comp.setdefault(c, F.lit(0.0))
-    mol = mole_fraction_exprs(comp)
-    m = {s: mol.get(s, F.lit(0.0)) * F.lit(100.0) for s in set(mol) | set(VISCOSITY_COMPONENTS)}
+    mol = mole_fraction_exprs(
+        components_expr(melt, VISCOSITY_COMPONENTS, comp)
+    )
+    m = {s: x * 100.0 for s, x in mol.items()}
     p = _VISC
 
     B = (
@@ -125,19 +137,13 @@ def calculate_temperature(
     T = 1500 + (V_liquid − V_P − V_ref − ΣX·dVdT·(1500−Tref)) / ΣX·dVdT
     """
     rho = as_col(density)
-    P = as_col(P_bar)
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in melt.species}
-    for c in DENSITY_COMPONENTS:
-        comp.setdefault(c, F.lit(0.0))
-    mol = mole_fraction_exprs(comp)
+    dP = as_col(P_bar) - 1.0
+    mol = mole_fraction_exprs(components_expr(melt, DENSITY_COMPONENTS))
     mass = csum(
-        mol[s] * F.lit(chem.calculate_weight(s)) for s in DENSITY_COMPONENTS
+        mol[s] * chem.calculate_weight(s) for s in DENSITY_COMPONENTS
     )
-    V_liquid = mass * F.lit(1e3) / rho
-    V_P = csum(
-        (P - F.lit(1.0)) * F.lit(DVDP[s]) * mol[s]
-        for s in DENSITY_COMPONENTS
-    )
+    V_liquid = mass * 1e3 / rho
+    V_P = csum(dP * DVDP[s] * mol[s] for s in DENSITY_COMPONENTS)
     V_ref = csum(
         F.lit(MOLAR_VOLUMES[s]) * mol[s] for s in DENSITY_COMPONENTS
     )

@@ -19,6 +19,14 @@ from pyspark.sql import functions as F
 
 from magmapandas_spark.chem import elements as chem
 from magmapandas_spark.core.geoframe import GeoFrame
+from magmapandas_spark.models.common import (
+    as_col,
+    cation_fraction_exprs,
+    components_expr,
+    csum,
+    mole_exprs,
+    mole_fraction_exprs,
+)
 
 # standard errors of estimate, K (``thermometers/melt.py:36-48``)
 ERRORS = {
@@ -70,56 +78,6 @@ _BEATTIE = {
 }
 
 
-def _sum(cols) -> Column:
-    cols = list(cols)
-    return reduce(lambda a, b: a + b, cols) if cols else F.lit(0.0)
-
-
-def _p_col(P_bar) -> Column:
-    if isinstance(P_bar, Column):
-        return P_bar
-    if isinstance(P_bar, str):
-        return F.col(P_bar)
-    return F.lit(float(P_bar))
-
-
-def _components(gf: GeoFrame, model: str) -> dict[str, Column]:
-    """check_components (``parse_io/parse.py:47-65``): null→0, missing→0."""
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in gf.species}
-    for c in COMPONENTS[model]:
-        comp.setdefault(c, F.lit(0.0))
-    return comp
-
-
-def _mole_fractions(
-    comp: dict[str, Column], exclude: tuple[str, ...] = ()
-) -> dict[str, Column]:
-    """wt.% → mol fraction over the included species
-    (``magmaFrame.py:356-385`` with normalise=True)."""
-    mol = {
-        s: c / F.lit(chem.calculate_weight(s))
-        for s, c in comp.items()
-        if s not in exclude
-    }
-    total = _sum(mol.values())
-    return {s: m / total for s, m in mol.items()}
-
-
-def _cation_fractions(
-    comp: dict[str, Column], exclude: tuple[str, ...] = ()
-) -> dict[str, Column]:
-    """wt.% oxides → cation mol fractions (``magmaFrame.py:225-264``)."""
-    cat = {}
-    for s, c in comp.items():
-        if s in exclude:
-            continue
-        name = chem.cation_name(s)
-        e = c / F.lit(chem.calculate_weight(s)) * F.lit(chem.cation_amount(s))
-        cat[name] = cat[name] + e if name in cat else e
-    total = _sum(cat.values())
-    return {n: e / total for n, e in cat.items()}
-
-
 def calibration_flag(gf: GeoFrame, model: str) -> Column | None:
     """Boolean in-calibration-range flag (``tools/calibration_range.py:10-46``).
 
@@ -131,7 +89,7 @@ def calibration_flag(gf: GeoFrame, model: str) -> Column | None:
     conds = []
     for spec, lo, hi in ranges:
         if isinstance(spec, tuple):
-            val = _sum(
+            val = csum(
                 F.coalesce(F.col(s), F.lit(0.0))
                 for s in spec
                 if s in gf.species
@@ -153,7 +111,7 @@ def _finish(
     (``thermometers/validate_temperatures.py:6-21``: negative or NaN
     temperatures are invalid — kept as a queryable flag, not an eager
     warning, to avoid driver actions in the operator path)."""
-    T_K = T_K + F.lit(ERRORS[model] * offset)
+    T_K = T_K + ERRORS[model] * offset
     out = gf.df.withColumn(out_col, T_K)
     return out
 
@@ -162,22 +120,22 @@ def putirka2008_13(
     melt: GeoFrame, P_bar=None, offset: float = 0.0, out_col: str = "T_K"
 ) -> DataFrame:
     """Putirka (2008) eq. 13 (``thermometers/melt.py:71-106``)."""
-    comp = _components(melt, "putirka2008_13")
-    T_K = F.lit(26.3) * comp["MgO"] + F.lit(994.4 + 273.15)
+    comp = components_expr(melt, COMPONENTS["putirka2008_13"])
+    T_K = F.lit(26.3) * comp["MgO"] + (994.4 + 273.15)
     return _finish(melt, "putirka2008_13", T_K, offset, out_col)
 
 
 def _putirka_14_15_core(melt: GeoFrame, model: str):
-    comp = _components(melt, model)
+    comp = components_expr(melt, COMPONENTS[model])
     H2O = comp["H2O"]
-    mol = _mole_fractions(comp, exclude=("H2O",))
+    mol = mole_fraction_exprs(comp, exclude=("H2O",))
     mg_no = mol["MgO"] / (mol["MgO"] + mol["FeO"])
     FeO = comp["FeO"]
     if "Fe2O3" in melt.species:
         w_feo, w_fe2o3 = chem.calculate_weight("FeO"), chem.calculate_weight(
             "Fe2O3"
         )
-        FeO = FeO + F.lit(2.0) * comp["Fe2O3"] * F.lit(w_feo / w_fe2o3)
+        FeO = FeO + F.lit(2.0) * comp["Fe2O3"] * (w_feo / w_fe2o3)
     return comp, H2O, mg_no, FeO
 
 
@@ -193,7 +151,7 @@ def putirka2008_14(
         + F.lit(9.585) * FeO
         + F.lit(14.87) * (comp["Na2O"] + comp["K2O"])
         - F.lit(9.176) * H2O
-        + F.lit(273.15)
+        + 273.15
     )
     return _finish(melt, "putirka2008_14", T_K, offset, out_col)
 
@@ -204,7 +162,7 @@ def putirka2008_15(
     """Putirka (2008) eq. 15 — the reference's default thermometer
     (``thermometers/melt.py:191-279``)."""
     comp, H2O, mg_no, FeO = _putirka_14_15_core(melt, "putirka2008_15")
-    P_GPa = _p_col(P_bar) / F.lit(1e4)
+    P_GPa = as_col(P_bar) / 1e4
     T_K = (
         F.lit(815.3)
         + F.lit(265.5) * mg_no
@@ -213,7 +171,7 @@ def putirka2008_15(
         + F.lit(6.646) * (comp["Na2O"] + comp["K2O"])
         + F.lit(39.16) * P_GPa
         - F.lit(12.83) * H2O
-        + F.lit(273.15)
+        + 273.15
     )
     return _finish(melt, "putirka2008_15", T_K, offset, out_col)
 
@@ -222,10 +180,10 @@ def putirka2008_16(
     melt: GeoFrame, P_bar=0.0, offset: float = 0.0, out_col: str = "T_K"
 ) -> DataFrame:
     """Putirka (2008) eq. 16 (``thermometers/melt.py:282-346``)."""
-    comp = _components(melt, "putirka2008_16")
+    comp = components_expr(melt, COMPONENTS["putirka2008_16"])
     exclude = ("H2O",) if "H2O" in melt.species else ()
-    mol = _mole_fractions(comp, exclude=exclude)
-    P_GPa = _p_col(P_bar) / F.lit(1e4)
+    mol = mole_fraction_exprs(comp, exclude=exclude)
+    P_GPa = as_col(P_bar) / 1e4
     T_K = (
         F.lit(-583.0)
         + F.lit(3141.0) * mol["SiO2"]
@@ -233,7 +191,7 @@ def putirka2008_16(
         + F.lit(1338.6) * mol["MgO"]
         - F.lit(31440.0) * mol["SiO2"] * mol["Al2O3"]
         + F.lit(77.67) * P_GPa
-        + F.lit(273.15)
+        + 273.15
     )
     return _finish(melt, "putirka2008_16", T_K, offset, out_col)
 
@@ -243,18 +201,18 @@ def putirka2008_22(
 ) -> DataFrame:
     """Putirka (2008) eq. 22 with Beattie (1993) eq. 12 D_Mg
     (``thermometers/melt.py:349-425``)."""
-    comp = _components(melt, "putirka2008_22")
+    comp = components_expr(melt, COMPONENTS["putirka2008_22"])
     H2O = comp["H2O"]
-    cat = _cation_fractions(comp, exclude=("H2O",))
-    P_GPa = _p_col(P_bar) / F.lit(1e4)
+    cat = cation_fraction_exprs(mole_exprs(comp, ("H2O",)))
+    P_GPa = as_col(P_bar) / 1e4
 
     def c(name: str) -> Column:
         return cat.get(name, F.lit(0.0))
 
-    num = F.lit(0.666) - _sum(F.lit(b) * c(n) for n, (_, b) in _BEATTIE.items())
-    den = _sum(F.lit(a) * c(n) for n, (a, _) in _BEATTIE.items())
+    num = F.lit(0.666) - csum(F.lit(b) * c(n) for n, (_, b) in _BEATTIE.items())
+    den = csum(F.lit(a) * c(n) for n, (a, _) in _BEATTIE.items())
     lnD_Mg = F.log(num / den)
-    C_NM = _sum(c(n) for n in ("Fe", "Mn", "Mg", "Ca", "Co", "Ni"))
+    C_NM = csum(c(n) for n in ("Fe", "Mn", "Mg", "Ca", "Co", "Ni"))
     NF = F.lit(3.5) * F.log(F.lit(1.0) - c("Al")) + F.lit(7.0) * F.log(
         F.lit(1.0) - c("Ti")
     )
@@ -268,7 +226,7 @@ def putirka2008_22(
         - F.lit(1.41) * NF
         + F.lit(0.222) * H2O
         + F.lit(0.5) * P_GPa
-    ) + F.lit(273.15)
+    ) + 273.15
     return _finish(melt, "putirka2008_22", T_K, offset, out_col)
 
 
@@ -278,11 +236,11 @@ def sun2020(
     """Sun & Dasgupta (2020) eq. 6 (``thermometers/melt.py:428-486``),
     on the cation-moles-per-oxygen basis
     (``tools/modify_compositions.py:38-74``)."""
-    comp = _components(melt, "sun2020")
-    P_GPa = _p_col(P_bar) / F.lit(1e4)
+    comp = components_expr(melt, COMPONENTS["sun2020"])
+    P_GPa = as_col(P_bar) / 1e4
 
     # mole fractions of the full composition
-    mol = _mole_fractions(comp)
+    mol = mole_fraction_exprs(comp)
     # volatile-free oxide subset on the *mole* basis
     volatiles = ("H2O", "CO2", "F", "S", "Cl")
     oxides = [
@@ -290,15 +248,15 @@ def sun2020(
         for s in mol
         if s not in volatiles and chem.oxygen_amount(s) > 0
     ]
-    o_moles = {s: mol[s] * F.lit(chem.oxygen_amount(s)) for s in oxides}
-    total_o = _sum(o_moles.values())
+    o_moles = {s: mol[s] * chem.oxygen_amount(s) for s in oxides}
+    total_o = csum(o_moles.values())
     per_ox = {}
     for s in oxides:
         cpo = chem.cation_amount(s) / chem.oxygen_amount(s)
         from fractions import Fraction as _Fr
 
         name = f"{chem.cation_name(s)}{_Fr(cpo).limit_denominator()}O"
-        per_ox[name] = o_moles[s] / total_o * F.lit(cpo)
+        per_ox[name] = o_moles[s] / total_o * cpo
 
     def u(name: str) -> Column:
         return per_ox.get(name, F.lit(0.0))
@@ -321,8 +279,8 @@ def shea2022(
     melt: GeoFrame, P_bar=None, offset: float = 0.0, out_col: str = "T_K"
 ) -> DataFrame:
     """Shea et al. (2022) eq. 1 (``thermometers/melt.py:489-521``)."""
-    comp = _components(melt, "shea2022")
-    T_K = F.lit(21.2) * comp["MgO"] + F.lit(1017.0 + 273.15)
+    comp = components_expr(melt, COMPONENTS["shea2022"])
+    T_K = F.lit(21.2) * comp["MgO"] + (1017.0 + 273.15)
     return _finish(melt, "shea2022", T_K, offset, out_col)
 
 
@@ -331,25 +289,25 @@ def sugawara2000_3(
 ) -> DataFrame:
     """Sugawara (2000) eq. 3 + H2O correction eq. 7a
     (``thermometers/melt.py:524-567``)."""
-    comp = _components(melt, "sugawara2000_3")
+    comp = components_expr(melt, COMPONENTS["sugawara2000_3"])
     # anhydrous, renormalised to 100 wt.% then to mol percent
     anhydrous = {
         s: c for s, c in comp.items() if s != "H2O"
     }
-    total = _sum(anhydrous.values())
-    anhydrous = {s: c / total * F.lit(100.0) for s, c in anhydrous.items()}
+    total = csum(anhydrous.values())
+    anhydrous = {s: c / total * 100.0 for s, c in anhydrous.items()}
     mol_pc = {
-        s: e * F.lit(100.0)
-        for s, e in _mole_fractions(anhydrous).items()
+        s: e * 100.0
+        for s, e in mole_fraction_exprs(anhydrous).items()
     }
     T_K = (
         F.lit(1293.0)
         + F.lit(14.60) * mol_pc["MgO"]
-        + F.lit(5.5e-3) * _p_col(P_bar)
+        + F.lit(5.5e-3) * as_col(P_bar)
     )
     if "H2O" in melt.species:
-        mol_full = _mole_fractions(comp)
-        T_K = T_K - F.lit(5.403) * mol_full["H2O"] * F.lit(100.0)
+        mol_full = mole_fraction_exprs(comp)
+        T_K = T_K - F.lit(5.403) * mol_full["H2O"] * 100.0
     return _finish(melt, "sugawara2000_3", T_K, offset, out_col)
 
 
@@ -358,13 +316,13 @@ def sugawara2000_6a(
 ) -> DataFrame:
     """Sugawara (2000) eq. 6a + H2O correction eq. 7a
     (``thermometers/melt.py:570-616``)."""
-    comp = _components(melt, "sugawara2000_6a")
+    comp = components_expr(melt, COMPONENTS["sugawara2000_6a"])
     anhydrous = {s: c for s, c in comp.items() if s != "H2O"}
-    total = _sum(anhydrous.values())
-    anhydrous = {s: c / total * F.lit(100.0) for s, c in anhydrous.items()}
+    total = csum(anhydrous.values())
+    anhydrous = {s: c / total * 100.0 for s, c in anhydrous.items()}
     mol_pc = {
-        s: e * F.lit(100.0)
-        for s, e in _mole_fractions(anhydrous).items()
+        s: e * 100.0
+        for s, e in mole_fraction_exprs(anhydrous).items()
     }
     T_K = (
         F.lit(1466.0)
@@ -372,11 +330,11 @@ def sugawara2000_6a(
         - F.lit(0.5) * mol_pc["FeO"]
         + F.lit(12.32) * mol_pc["MgO"]
         - F.lit(3.899) * mol_pc["CaO"]
-        + F.lit(4.3e-3) * _p_col(P_bar)
+        + F.lit(4.3e-3) * as_col(P_bar)
     )
     if "H2O" in melt.species:
-        mol_full = _mole_fractions(comp)
-        T_K = T_K - F.lit(5.403) * mol_full["H2O"] * F.lit(100.0)
+        mol_full = mole_fraction_exprs(comp)
+        T_K = T_K - F.lit(5.403) * mol_full["H2O"] * 100.0
     return _finish(melt, "sugawara2000_6a", T_K, offset, out_col)
 
 
@@ -395,30 +353,27 @@ def putirka2007_4(
     (``olivine_cations.loc[liquid_cations.index]``) becomes an inner
     equi-join on the sample key — broadcast-sized in practice."""
     has_h2o = "H2O" in liquid.species
-    comp = {
-        s: F.coalesce(F.col(s), F.lit(0.0)) for s in liquid.species
-    }
-    for c in ["MgO", "FeO", "Na2O", "K2O", "CaO", "SiO2", "TiO2"]:
-        comp.setdefault(c, F.lit(0.0))
+    comp = components_expr(
+        liquid, ["MgO", "FeO", "Na2O", "K2O", "CaO", "SiO2", "TiO2"]
+    )
     H2O = comp["H2O"] if has_h2o else F.lit(0.0)
     exclude = ("H2O",) if has_h2o else ()
-    mol = _mole_fractions(comp, exclude=exclude)
-    cat = _cation_fractions(comp, exclude=exclude)
+    mol = mole_fraction_exprs(comp, exclude=exclude)
+    cat = cation_fraction_exprs(mole_exprs(comp, exclude))
 
-    ol_comp = {
-        s: F.coalesce(F.col(f"ol_{s}"), F.lit(0.0)) for s in olivine.species
-    }
-    ol_cat = _cation_fractions(ol_comp)
+    ol_cat = cation_fraction_exprs(
+        mole_exprs(components_expr(olivine, prefix="ol_"))
+    )
 
     def c(d, name):
         return d.get(name, F.lit(0.0))
 
-    C_NM = _sum(c(cat, n) for n in ("Fe", "Mn", "Mg", "Ca", "Co", "Ni"))
+    C_NM = csum(c(cat, n) for n in ("Fe", "Mn", "Mg", "Ca", "Co", "Ni"))
     NF = F.lit(3.5) * F.log(F.lit(1.0) - c(cat, "Al")) + F.lit(7.0) * F.log(
         F.lit(1.0) - c(cat, "Ti")
     )
     D_Mg = c(ol_cat, "Mg") / c(cat, "Mg")
-    P_GPa = _p_col(P_bar) / F.lit(1e4)
+    P_GPa = as_col(P_bar) / 1e4
 
     numerator = (
         F.lit(15294.6) + F.lit(1318.8) * P_GPa + F.lit(2.4834) * P_GPa * P_GPa
@@ -433,7 +388,7 @@ def putirka2007_4(
         + F.lit(0.5) * P_GPa
     )
     error = 29.0 if has_h2o else 45.0
-    T_K = numerator / denominator + F.lit(273.15) + F.lit(error * offset)
+    T_K = numerator / denominator + 273.15 + error * offset
 
     ol_renamed = olivine.df.select(
         F.col(on),

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from magmapandas_spark.chem import elements as chem
 from magmapandas_spark.core.geoframe import GeoFrame
 from magmapandas_spark.models import eos
-from magmapandas_spark.models.common import as_col
+from magmapandas_spark.models.common import as_col, components_expr
 
 W = chem.calculate_weight
 
@@ -499,7 +499,7 @@ def volatile_saturation_pressure(
     melt = GeoFrame(df, units=melt.units, datatype=melt.datatype,
                     species=melt.species)
     T = as_col(T_K)
-    fields = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in species_cols}
+    fields = components_expr(melt)
     fields["__T_K"] = T
     struct = F.struct(*[v.alias(k) for k, v in fields.items()])
 
@@ -559,7 +559,7 @@ def volatile_solubility(
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     species_cols = list(melt.species)
-    fields = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in species_cols}
+    fields = components_expr(melt)
     fields["__T_K"] = as_col(T_K)
     fields["__P_bar"] = as_col(P_bar)
     fields["__x_fluid"] = as_col(x_fluid)
@@ -645,7 +645,7 @@ def co2_h2o_isobars(
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    fields = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in species_cols}
+    fields = components_expr(melt)
     fields["__P"] = F.col("__iso_P").cast("double")
     fields["__x"] = F.col("__iso_x").cast("double")
     struct = F.struct(*[v.alias(k) for k, v in fields.items()])
@@ -700,17 +700,15 @@ def shishkina_co2_saturation_expr(melt: GeoFrame) -> Column:
     # nested form blew past JIT method limits and ran interpreted.
     # This is also exactly the (single-level) shape the DuckDB oracle
     # computes.
-    comp = {
-        s: F.coalesce(F.col(s), F.lit(0.0))
-        for s in melt.species
-        if s not in ("H2O", "CO2")
-    }
+    comp = components_expr(melt, ["CO2"])
     # accumulate, don't overwrite: two oxides of the same cation
     # (e.g. FeO + Fe2O3) must SUM their cation contributions, matching
     # the reference's moles-per-cation accumulation semantics
     w_terms: dict[str, Column] = {}
     for s, c in comp.items():
-        term = c / F.lit(W(s)) * F.lit(float(cation_amount(s)))
+        if s in ("H2O", "CO2"):
+            continue
+        term = c / W(s) * float(cation_amount(s))
         n = cation_name(s)
         w_terms[n] = term if n not in w_terms else w_terms[n] + term
     total = None
@@ -727,12 +725,11 @@ def shishkina_co2_saturation_expr(melt: GeoFrame) -> Column:
         + F.lit(0.4) * g("Fe")
     ) / (g("Si") + g("Al"))
     p = SHISHKINA_CO2
-    co2 = F.coalesce(F.col("CO2"), F.lit(0.0))
+    co2 = comp["CO2"]
     f = F.exp(
-        (F.log(co2 * F.lit(1e4)) - F.lit(p["B"]) * pi_star - F.lit(p["C"]))
-        / F.lit(p["A"])
+        (F.log(co2 * 1e4) - F.lit(p["B"]) * pi_star - p["C"]) / p["A"]
     )
-    return F.when(co2 > 0, f * F.lit(10.0)).otherwise(F.lit(0.0))
+    return F.when(co2 > 0, f * 10.0).otherwise(F.lit(0.0))
 
 
 def register_solubility_model(

@@ -245,15 +245,17 @@ def q_redox_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end."""
     from magmapandas_spark.models import fe3fe2, fo2
     from magmapandas_spark.models import thermometers as tm
-    from magmapandas_spark.models.common import mole_fraction_exprs
+    from magmapandas_spark.models.common import (
+        components_expr,
+        mole_fraction_exprs,
+    )
 
     gf = synthetic_melt(spark, sf_dir)
     with_t = tm.putirka2008_15(gf, P_bar="P_bar")
     gf2 = GeoFrame(with_t, units="wt.%", datatype="oxide",
                    species=MELT_SPECIES)
     fO2 = fo2.fo2_qfm_1bar(1.0, F.col("T_K"))
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in gf2.species}
-    mol = mole_fraction_exprs(comp)
+    mol = mole_fraction_exprs(components_expr(gf2))
     fe = fe3fe2.fe3fe2_borisov2018(mol, F.col("T_K"), fO2)
     return (
         gf2.df.withColumn("Fe3Fe2", fe)
@@ -312,12 +314,14 @@ _DENSITY = {
 def q_density_viscosity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iacovino density + Giordano viscosity over the synthetic melt."""
     from magmapandas_spark.models import rheology
+    from magmapandas_spark.models.common import components_expr
 
     gf = synthetic_melt(spark, sf_dir)
     T_K, P_bar = 1473.15, 2000.0
-    d = rheology.calculate_density(gf, T_K=T_K, P_bar=P_bar)
+    comp = components_expr(gf)
+    d = rheology.calculate_density(gf, T_K=T_K, P_bar=P_bar, comp=comp)
     gf_d = GeoFrame(d, units="wt.%", datatype="oxide", species=MELT_SPECIES)
-    out = rheology.calculate_viscosity(gf_d, T_K=T_K)
+    out = rheology.calculate_viscosity(gf_d, T_K=T_K, comp=comp)
     return (
         out.select(
             "name",

@@ -750,20 +750,30 @@ ORDER BY name
 """
 
 
+def _redox_prologue(spark: SparkSession, sf_dir: str):
+    """The shared input of the Fe3+/Fe2+ expression-model queries: the
+    synthetic melt, T = 1400 + (name % 200)/2 K, its 1-bar QFM fO2 and
+    the melt's mole fractions."""
+    from magmapandas_spark.models import fo2 as fo2_mod
+    from magmapandas_spark.models.common import (
+        components_expr,
+        mole_fraction_exprs,
+    )
+
+    gf = synthetic_melt(spark, sf_dir)
+    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / 2.0
+    fO2 = fo2_mod.fo2_qfm_1bar(0.0, T)
+    return gf, T, fO2, mole_fraction_exprs(components_expr(gf))
+
+
 def q_fe3fe2_expr_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two expression-tier Fe3+/Fe2+ models (borisov2018, oneill2018)
     under 1-bar QFM fO2, T = 1400 + (name % 200)/2 K — the full redox
     dispatch chain with an exact SQL oracle (fO2 polynomial + mole /
     cation fractions are all closed-form)."""
     from magmapandas_spark.models import fe3fe2 as fe_mod
-    from magmapandas_spark.models import fo2 as fo2_mod
-    from magmapandas_spark.models.common import mole_fraction_exprs
 
-    gf = synthetic_melt(spark, sf_dir)
-    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
-    fO2 = fo2_mod.fo2_qfm_1bar(0.0, T)
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in gf.species}
-    mol = mole_fraction_exprs(comp)
+    gf, T, fO2, mol = _redox_prologue(spark, sf_dir)
     return gf.df.select(
         "name",
         F.round(T, 4).alias("T_K"),
@@ -841,16 +851,18 @@ def q_kd_expr_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel columns (``Kd_models.py:422-593``) — inputs are the
     renormalised wt.% oxides, P from the sample column."""
     from magmapandas_spark.core.geoframe import GeoFrame
+    from magmapandas_spark.models.common import components_expr
     from magmapandas_spark.models.kd import calculate_FeMg_Kd
 
     gf = synthetic_melt(spark, sf_dir)
 
     g = gf
+    comp = components_expr(gf)
     for model in ("putirka2016_8a", "putirka2016_8b", "putirka2016_8c",
                   "putirka2016_8d"):
         df = calculate_FeMg_Kd(
             g, T_K=F.lit(1673.15), P_bar="P_bar", model=model,
-            Fe3Fe2=F.lit(0.2), out_col=f"kd_{model[-2:]}",
+            Fe3Fe2=F.lit(0.2), out_col=f"kd_{model[-2:]}", comp=comp,
         )
         g = GeoFrame(df, units=g.units, datatype=g.datatype,
                      species=g.species)
@@ -1002,33 +1014,25 @@ def q_unit_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single narrow plan (no joins: the synthetic key is non-unique)
     base = gf.df.select(
         "name",
-        (F.col("H2O") * F.lit(1e4)).alias("H2O_ppm"),
+        (F.col("H2O") * 1e4).alias("H2O_ppm"),
         *[F.col(s).alias(f"__w_{s}") for s in gf.species],
     )
     # recompute mol/cat fractions inline over the aliased wt columns
-    from magmapandas_spark.chem import elements as chem
+    from magmapandas_spark.models.common import (
+        cation_fraction_exprs,
+        csum,
+        mole_exprs,
+    )
 
-    mol_terms = {
-        s: F.col(f"__w_{s}") / F.lit(chem.calculate_weight(s))
-        for s in gf.species
-    }
-    mol_total = None
-    for c in mol_terms.values():
-        mol_total = c if mol_total is None else mol_total + c
-    cat_terms: dict = {}
-    for s in gf.species:
-        n = chem.cation_name(s)
-        e = mol_terms[s] * F.lit(chem.cation_amount(s))
-        cat_terms[n] = cat_terms[n] + e if n in cat_terms else e
-    cat_total = None
-    for c in cat_terms.values():
-        cat_total = c if cat_total is None else cat_total + c
+    moles = mole_exprs({s: F.col(f"__w_{s}") for s in gf.species})
+    mol_total = csum(moles.values())
+    cat = cation_fraction_exprs(moles)
     return base.select(
         "name",
-        F.round(mol_terms["SiO2"] / mol_total, 6).alias("mol_SiO2"),
-        F.round(mol_terms["MgO"] / mol_total, 6).alias("mol_MgO"),
-        F.round(cat_terms["Si"] / cat_total, 6).alias("cat_Si"),
-        F.round(cat_terms["Na"] / cat_total, 6).alias("cat_Na"),
+        F.round(moles["SiO2"] / mol_total, 6).alias("mol_SiO2"),
+        F.round(moles["MgO"] / mol_total, 6).alias("mol_MgO"),
+        F.round(cat["Si"], 6).alias("cat_Si"),
+        F.round(cat["Na"], 6).alias("cat_Na"),
         F.round("H2O_ppm", 4).alias("H2O_ppm"),
     ).orderBy("name")
 
@@ -1664,7 +1668,7 @@ def q_fe3fe2_deng2020(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magmapandas_spark.models import fe3fe2 as fe_mod
 
     gf = _melt_subset(spark, sf_dir)
-    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
+    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / 2.0
     out = fe_mod.calculate_Fe3Fe2(
         gf, T_K=T, P_bar="P_bar", model="deng2020", fO2_buffer="QFM_1bar",
         dfO2=1.0,
@@ -1703,7 +1707,7 @@ def q_fo2_buffers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magmapandas_spark.models import fo2 as fo2_mod
 
     gf = synthetic_melt(spark, sf_dir)
-    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
+    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / 2.0
     P = F.col("P_bar")
     out = {
         "nno": fo2_mod.fo2_nno(0.0, T, P),
@@ -1817,7 +1821,7 @@ def q_qfm_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     gf = synthetic_melt(spark, sf_dir)
     tvals = gf.df.select(
         (
-            F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
+            F.lit(1400.0) + (F.col("name") % 200).cast("double") / 2.0
         ).alias("t")
     ).distinct()
     grid = tvals.select(
@@ -1852,7 +1856,7 @@ def q_iw_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     gf = synthetic_melt(spark, sf_dir)
     tvals = gf.df.select(
         (
-            F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
+            F.lit(1400.0) + (F.col("name") % 200).cast("double") / 2.0
         ).alias("t")
     ).distinct()
     grid = tvals.select(
@@ -2019,14 +2023,8 @@ def q_fe3fe2_expr_models2(spark: SparkSession, sf_dir: str) -> DataFrame:
     — same 1-bar-QFM fO2 chain as fe3fe2_expr_models, exact SQL
     oracle."""
     from magmapandas_spark.models import fe3fe2 as fe_mod
-    from magmapandas_spark.models import fo2 as fo2_mod
-    from magmapandas_spark.models.common import mole_fraction_exprs
 
-    gf = synthetic_melt(spark, sf_dir)
-    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
-    fO2 = fo2_mod.fo2_qfm_1bar(0.0, T)
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in gf.species}
-    mol = mole_fraction_exprs(comp)
+    gf, T, fO2, mol = _redox_prologue(spark, sf_dir)
     return gf.df.select(
         "name",
         F.round(
@@ -2106,14 +2104,8 @@ def q_fe3fe2_expr_models3(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pressure-interpolated EOS closed form) and putirka2016_6c (NBO/T
     with Al(IV) capping — LEAST in both engines)."""
     from magmapandas_spark.models import fe3fe2 as fe_mod
-    from magmapandas_spark.models import fo2 as fo2_mod
-    from magmapandas_spark.models.common import mole_fraction_exprs
 
-    gf = synthetic_melt(spark, sf_dir)
-    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
-    fO2 = fo2_mod.fo2_qfm_1bar(0.0, T)
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in gf.species}
-    mol = mole_fraction_exprs(comp)
+    gf, T, fO2, mol = _redox_prologue(spark, sf_dir)
     return gf.df.select(
         "name",
         F.round(
@@ -2204,14 +2196,8 @@ def q_fe3fe2_hirschmann2022(spark: SparkSession, sf_dir: str) -> DataFrame:
     pressure term: the most structured expression-tier redox model,
     still fully SQL-expressible (SURVEY §2.8)."""
     from magmapandas_spark.models import fe3fe2 as fe_mod
-    from magmapandas_spark.models import fo2 as fo2_mod
-    from magmapandas_spark.models.common import mole_fraction_exprs
 
-    gf = synthetic_melt(spark, sf_dir)
-    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
-    fO2 = fo2_mod.fo2_qfm_1bar(0.0, T)
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in gf.species}
-    mol = mole_fraction_exprs(comp)
+    gf, T, fO2, mol = _redox_prologue(spark, sf_dir)
     return gf.df.select(
         "name",
         F.round(
@@ -2301,7 +2287,7 @@ def q_fe3fe2_solvers2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magmapandas_spark.models import fe3fe2 as fe_mod
 
     gf = _melt_subset(spark, sf_dir)
-    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
+    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / 2.0
     df = fe_mod.calculate_Fe3Fe2(
         gf, T_K=T, P_bar="P_bar", model="oneill2006",
         fO2_buffer="QFM_1bar", dfO2=0.0, out_col="fe3fe2_oneill06",

@@ -52,6 +52,16 @@ def get_spark(
             "spark.sql.icu.caseMappings.enabled",
             os.environ.get("SPARK_GRAFT_ICU_CASE_MAPPINGS", "false"),
         )
+        # No Python call-site capture per Column/functions call. With
+        # it on (the stock default) PySpark wraps every such call in a
+        # conf read plus a JVM origin set/clear and a stack walk, so a
+        # binary operator costs 11 py4j round trips instead of 1 and a
+        # model formula's build dominates its query. Errors still name
+        # the failing expression, but no longer the user's file:line —
+        # the second divergence documented in README.md "Session
+        # defaults". PySpark reads this once per process, at the first
+        # Column call after a session exists, so it is fixed here.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")

@@ -223,6 +223,19 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
+def _await_stream(q, timeout_s):
+    """Wait for an availableNow query to finish. One still running after
+    ``timeout_s`` is stopped and raises ``TimeoutError`` naming it, so a
+    caller never reads the partial output of a cut-off query."""
+    if q.awaitTermination(timeout_s) is False:
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} did not finish "
+            f"within {timeout_s} s"
+        )
+    return q
+
+
 def run_stream_to_memory(stream_df: DataFrame, name: str,
                          output_mode: str = "complete",
                          timeout_s: int = 120) -> DataFrame:
@@ -239,7 +252,7 @@ def run_stream_to_memory(stream_df: DataFrame, name: str,
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    _await_stream(q, timeout_s)
     return stream_df.sparkSession.table(name)
 
 
@@ -327,8 +340,7 @@ def streaming_dedup_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_stream(q, timeout_s)
 
 
 # ---------------------------------------------------------------------
@@ -443,8 +455,7 @@ def streaming_hll_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_stream(q, timeout_s)
 
 
 def streaming_cms_ingest(
@@ -476,8 +487,7 @@ def streaming_cms_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_stream(q, timeout_s)
 
 
 def streaming_histogram_ingest(
@@ -520,8 +530,7 @@ def streaming_histogram_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_stream(q, timeout_s)
 
 
 def streaming_stats_ingest(
@@ -557,8 +566,7 @@ def streaming_stats_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_stream(q, timeout_s)
 
 
 def streaming_index_ingest(
@@ -598,8 +606,7 @@ def streaming_index_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_stream(q, timeout_s)
 
 
 def streaming_reservoir_ingest(
@@ -638,8 +645,7 @@ def streaming_reservoir_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_stream(q, timeout_s)
 
 
 def streaming_validation_ingest(
@@ -686,8 +692,7 @@ def streaming_validation_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_stream(q, timeout_s)
 
 
 def streaming_transitions_ingest(
@@ -788,8 +793,7 @@ def streaming_transitions_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_stream(q, timeout_s)
 
 
 def finalize_streaming_transitions(
@@ -908,8 +912,7 @@ def streaming_merge_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_stream(q, timeout_s)
 
 
 # ---------------------------------------------------------------------
@@ -1034,8 +1037,7 @@ def streaming_cusum_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_stream(q, timeout_s)
 
 
 def finalize_streaming_cusum(
@@ -1141,8 +1143,7 @@ def streaming_seasonal_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_stream(q, timeout_s)
 
 
 def finalize_streaming_seasonal(
@@ -1216,8 +1217,7 @@ def streaming_psi_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_stream(q, timeout_s)
 
 
 def finalize_streaming_psi(
@@ -1319,8 +1319,7 @@ def streaming_fp_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_stream(q, timeout_s)
 
 
 def streaming_funnel_ingest(
@@ -1456,8 +1455,7 @@ def streaming_funnel_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_stream(q, timeout_s)
 
 
 def finalize_streaming_funnel(

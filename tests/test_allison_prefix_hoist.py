@@ -21,7 +21,6 @@ import pytest
 from magmapandas_spark.models import allison as al
 from magmapandas_spark.models.allison import (
     _allison_cations,
-    _bisect,
     _deltaV,
     _lnK0,
     _redkw,
@@ -33,6 +32,16 @@ from magmapandas_spark.models.allison import (
 # ---------------------------------------------------------------------
 # Verbatim replica of the r13 (pre-hoist) code paths
 # ---------------------------------------------------------------------
+
+
+def _bisect(f, lo, hi, iters: int = 48):
+    f_lo = f(lo)
+    for _ in range(iters):
+        mid = 0.5 * (lo + hi)
+        same = np.sign(f(mid)) == np.sign(f_lo)
+        lo = np.where(same, mid, lo)
+        hi = np.where(same, hi, mid)
+    return 0.5 * (lo + hi)
 
 
 def _rkcalc_old(T_K, P_bar, species):
@@ -265,3 +274,43 @@ def test_mixed_saturation_bitwise_identical(vary_T):
     P_new, x_new = al.allison_mixed_saturation_np(wt, h2o, co2, T)
     assert np.array_equal(P_old, P_new)
     assert np.array_equal(x_old, x_new)
+
+
+def _bisect_eos_old(f, lo, hi, iters=80):
+    lo = np.asarray(lo, dtype=float).copy()
+    hi = np.asarray(hi, dtype=float).copy()
+    flo = f(lo)
+    for _ in range(iters):
+        mid = 0.5 * (lo + hi)
+        fmid = f(mid)
+        same = np.sign(fmid) == np.sign(flo)
+        lo = np.where(same, mid, lo)
+        flo = np.where(same, fmid, flo)
+        hi = np.where(same, hi, mid)
+    return 0.5 * (lo + hi)
+
+
+@pytest.mark.parametrize("iters", [48, 60, 80])
+def test_one_bisection_kernel_bitwise_identical(iters):
+    """``eos.bisect_vectorized`` replaces both the Allison kernel and
+    its own earlier form: same halvings, bit for bit, including rows
+    whose residual is zero at the lower end, NaN, or never changes
+    sign."""
+    from magmapandas_spark.models.eos import bisect_vectorized
+
+    rng = np.random.default_rng(11)
+    root = rng.uniform(1.0, 1.4e4, 500)
+    root[:10] = _P_BRACKET[0]  # f(lo) == 0
+    root[10:20] = np.nan  # NaN residual everywhere
+    root[20:30] = 2e4  # no sign change inside the bracket
+
+    def f(p):
+        return np.log(p) - np.log(root)
+
+    lo = np.full_like(root, _P_BRACKET[0])
+    hi = np.full_like(root, _P_BRACKET[1])
+    new = bisect_vectorized(f, lo, hi, iters)
+    assert np.array_equal(new, _bisect(f, lo, hi, iters), equal_nan=True)
+    assert np.array_equal(
+        new, _bisect_eos_old(f, lo, hi, iters), equal_nan=True
+    )

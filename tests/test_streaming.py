@@ -55,6 +55,18 @@ def test_sliding_window_stream(spark, batch_events):
     )
 
 
+def test_stream_timeout_stops_query_and_raises(spark):
+    """A query still running at its timeout is stopped and reported,
+    not returned as a partial table."""
+    stream = streams.read_events_stream(spark, SF_DIR)
+    with pytest.raises(TimeoutError, match="timeout_test"):
+        streams.run_stream_to_memory(
+            streams.tumbling_counts(stream), "timeout_test", "complete",
+            timeout_s=0.001,
+        )
+    assert all(q.name != "timeout_test" for q in spark.streams.active)
+
+
 def test_dedup_within_watermark_stream(spark, batch_events):
     stream = streams.read_events_stream(spark, SF_DIR)
     got = streams.run_stream_to_memory(
